@@ -83,7 +83,9 @@ object Ivf {
     * row-major nlist×dim centroid matrix, each row L2-normalized.
     */
   private[graft] def train(base: DataFrame, n: Long, nlist: Int, dim: Int,
-                               iters: Int): Array[Float] = {
+                               iters: Int): Array[Float] = graft.Caches.withScope {
+    // every action on the sample runs here: the scope releases it even
+    // for a caller outside any scope (a library vectorArrivalBatch)
     val every = math.max(1L, n / (TrainPerCell * nlist))
     val sample = graft.Caches.scoped(
       base.filter(pmod(xxhash64(col("vec_id")), lit(every)) === 0)
@@ -441,10 +443,8 @@ object Ivf {
     * IVF recall↔cost knob).
     */
   /** Serving-process state, keyed by index path (which embeds the
-    * source mtime — entries are immutable; a few hundred KB each).
+    * source mtime — entries are immutable; a few KB each).
     */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Float]]()
   private val queryCache =
     new java.util.concurrent.ConcurrentHashMap[String, Array[org.apache.spark.sql.Row]]()
 
@@ -456,26 +456,15 @@ object Ivf {
     val nprobe = math.min(nlist, nprobeOverride.getOrElse(math.max(8, nlist / 8)))
     val path = buildIndex(spark, dir, Some(nlist))
 
-    // The centroid matrix and the query vectors are JVM-memoized per
-    // index path: the path embeds the source mtime, so both are
+    // The centroid matrix, the query vectors and the cell relation are
+    // JVM-memoized: the path embeds the source mtime, so all three are
     // immutable once built (a regenerated source is a NEW path) and a
     // serving process holds them resident — nlist×dim floats + |Q|
-    // rows, the exact state a FAISS server keeps in RAM. Without the
-    // memo every warm serve pays two extra collect jobs just to
-    // re-read what cannot have changed.
-    val cents = centroidCache.computeIfAbsent(path, _ => {
-      val centRows = spark.read.parquet(s"$path/centroids").collect()
-      val d = centRows.head.getSeq[Float](1).length
-      val m = new Array[Float](nlist * d)
-      centRows.foreach { r =>
-        val c = r.getInt(0)
-        val v = r.getSeq[Float](1)
-        var i = 0
-        while (i < d) { m(c * d + i) = v(i); i += 1 }
-      }
-      m
-    })
-    val dim = cents.length / nlist
+    // rows + the cell file index, the state a FAISS server keeps in
+    // RAM. Without the memo every warm serve re-reads what cannot have
+    // changed: two collect jobs, a listing job over the nlist cell
+    // directories and a schema job.
+    val (cents, _, dim) = centroidTableStamped(spark, s"$path/centroids")
 
     // The 8 query vectors: a vec_id-pushdown scan (row-group stats skip
     // everything else), collected — bounded by the query-set size, the
@@ -497,7 +486,7 @@ object Ivf {
     val probes = probePairs.toDF("query_id", "cell")
 
     val probedCells = probePairs.map(_._2).distinct
-    val store = spark.read.parquet(s"$path/cells")
+    val store = graft.sources.Committed.read(spark, Seq(s"$path/cells"))
       .filter(col("cell").isin(probedCells: _*)) // literal IN → PartitionFilters
     val qFast = qDf.select(col("query_id"), col("qe"),
       sqrt(graft.functions.DotF32.dot_f32(col("qe"), col("qe"))).as("qnf"))
@@ -578,7 +567,7 @@ object Ivf {
     val centSuccess = new org.apache.hadoop.fs.Path(centPath, "_SUCCESS")
     if (centSuccess.getFileSystem(spark.sessionState.newHadoopConf())
         .exists(centSuccess))
-      readCentroidMatrix(spark, centPath)
+      readCentroidMatrix(spark, centPath)._1
     else {
       val c = train(base, base.count(), nlist, dim, iters)
       import spark.implicits._
@@ -590,7 +579,10 @@ object Ivf {
     }
   }
 
-  private def readCentroidMatrix(spark: SparkSession, path: String): Array[Float] = {
+  /** A `(cell, centroid)` table as (row-major nlist×dim matrix, nlist,
+    * dim), read in one job. */
+  private def readCentroidMatrix(spark: SparkSession,
+                                 path: String): (Array[Float], Int, Int) = {
     val rows = spark.read.parquet(path).collect()
     val d = rows.head.getSeq[Float](1).length
     val m = new Array[Float](rows.length * d)
@@ -599,44 +591,31 @@ object Ivf {
       var i = 0
       while (i < d) { m(c * d + i) = v(i); i += 1 }
     }
-    m
+    (m, rows.length, d)
   }
 
-  /** Arrival-store centroid tables are MUTABLE across processes — a
-    * [[retrainArrivalStore]] cutover replaces the whole table in
-    * place, unlike [[buildIndex]]'s mtime-embedding immutable paths —
-    * so the serving memo is keyed by (path, file-listing digest):
-    * names + lengths + mtimes of the live `centroids/` tree. A serve
-    * in ANY process after a cutover sees a new stamp and reloads; the
-    * stale matrix can never be divided by the fresh table's row count
-    * (the r17 cross-process staleness advice). Value carries (matrix,
-    * nlist, dim) read in ONE job.
+  /** Serving memo of centroid tables. Arrival-store tables are MUTABLE
+    * across processes — a [[retrainArrivalStore]] cutover replaces the
+    * whole table in place, unlike [[buildIndex]]'s mtime-embedding
+    * immutable paths — so the memo is keyed by the table's commit stamp
+    * ([[graft.sources.Committed.stamp]]: its `_SUCCESS` length and
+    * mtime), the same stamp that keys the served cell relation. A
+    * serve in ANY process after a cutover sees a new stamp and
+    * reloads; the stale matrix can never be divided by the fresh
+    * table's row count (the r17 cross-process staleness advice). A
+    * table without `_SUCCESS` is read on every call.
     */
-  private val arrivalCentroidCache =
+  private val centroidCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Array[Float], Int, Int)]()
 
   private[graft] def centroidTableStamped(spark: SparkSession,
-                                          path: String): (Array[Float], Int, Int) = {
-    val (fs, p) = graft.streaming.ArrivalStore.fsFor(path)
-    val listing = fs.listStatus(p).sortBy(_.getPath.getName)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .mkString("\n")
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val stamp = md.digest(listing.getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    if (arrivalCentroidCache.size > 64) arrivalCentroidCache.clear() // retired stamps
-    arrivalCentroidCache.computeIfAbsent(s"$path@$stamp", _ => {
-      val rows = spark.read.parquet(path).collect()
-      val d = rows.head.getSeq[Float](1).length
-      val m = new Array[Float](rows.length * d)
-      rows.foreach { r =>
-        val c = r.getInt(0); val v = r.getSeq[Float](1)
-        var i = 0
-        while (i < d) { m(c * d + i) = v(i); i += 1 }
-      }
-      (m, rows.length, d)
-    })
-  }
+                                          path: String): (Array[Float], Int, Int) =
+    graft.sources.Committed.stamp(spark, Seq(path)) match {
+      case None => readCentroidMatrix(spark, path)
+      case Some(stamp) =>
+        if (centroidCache.size > 64) centroidCache.clear() // retired stamps
+        centroidCache.computeIfAbsent(stamp, _ => readCentroidMatrix(spark, path))
+    }
 
   /** Serve over the arrival-grown index: [[annIvfServe]]'s probe shape
     * — driver-computed probe cells from the resident centroid matrix,
@@ -647,6 +626,14 @@ object Ivf {
     * `cell=` partition prune applies inside each batch dir). `queries`
     * is the caller's bounded (query_id, embedding) API input, exactly
     * [[annIvfFrom]]'s convention.
+    *
+    * The centroid matrix and the relation over the committed batch
+    * dirs are memoized per session ([[graft.sources.Committed]]): a
+    * warm serve lists no `cell=` directory and infers no schema. Both
+    * are reused until a committed dir's `_SUCCESS` changes or the set
+    * of committed dirs does — an arrival batch, its replay, a
+    * compaction and a retrain cutover each commit a new `_SUCCESS`.
+    * Files rewritten out of band without one need a new session.
     */
   def arrivalAnnServe(spark: SparkSession, storeDir: String, queries: DataFrame,
                       k: Int = 10, nprobeOverride: Option[Int] = None,
@@ -674,8 +661,8 @@ object Ivf {
     val committed = graft.streaming.ArrivalStore
       .standingDirs(s"$storeDir/cells", Long.MaxValue, committedOnly = true)
     require(committed.nonEmpty, s"no committed arrival batches under $storeDir")
-    val store = spark.read.option("basePath", s"$storeDir/cells")
-      .parquet(committed: _*)
+    val store = graft.sources.Committed
+      .read(spark, committed, basePath = Some(s"$storeDir/cells"))
       .filter(col("cell").isin(probedCells: _*))
     val qFast = qDf.select(col("query_id"), col("qe"),
       sqrt(graft.functions.DotF32.dot_f32(col("qe"), col("qe"))).as("qnf"))
@@ -748,7 +735,7 @@ object Ivf {
     * SERVING processes as well: a serve issued inside the two-rename
     * cutover window can see a transiently missing subtree (it errors
     * cleanly and succeeds on retry — [[centroidTableStamped]] re-keys
-    * on the fresh table's listing digest, so no process ever probes
+    * on the fresh table's commit stamp, so no process ever probes
     * new cells under old centroids); quiescing serves across the
     * seconds-long cutover is the zero-error deployment. The rewrite
     * folds every batch's rows

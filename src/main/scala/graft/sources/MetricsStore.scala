@@ -52,7 +52,14 @@ object MetricsStore {
 
   /** Read back; date filters become partition pruning (verified by
     * PlanSpec — the scan's `PartitionFilters` must carry them).
+    *
+    * The relation is memoized per session by [[Committed.read]]: a
+    * request against an unchanged store lists no files and infers no
+    * schema. It is reused until the store's `_SUCCESS` changes, which
+    * every [[write]] does; files replaced out of band without a new
+    * `_SUCCESS` need a new session (see [[Committed]] for the mtime
+    * granularity the stamp assumes).
     */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Committed.read(spark, Seq(path))
 }

@@ -927,31 +927,13 @@ class PlanSpec extends AnyFunSuite {
       .corpusArrivalBatch(docs(0L until 40L), corpusStore, 0L, 0.0, 0.8, 8)
     graft.streaming.EventStream
       .nearDupArrivalBatch(docs(0L until 40L), nearDupStore, 0L, 0.9, 64, 16)
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = captured.add(qe.executedPlan)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val captured = Listened.plans(spark) {
       graft.streaming.EventStream
         .corpusArrivalBatch(docs1(100L until 140L), corpusStore, 1L, 0.0, 0.8, 8)
       graft.streaming.EventStream
         .nearDupArrivalBatch(docs1(100L until 140L), nearDupStore, 1L, 0.9, 64, 16)
-      // the execution listener bus is async — wait until the capture
-      // stabilizes (bounded)
-      var last = -1
-      var spins = 0
-      while (captured.size != last && spins < 60) {
-        last = captured.size; spins += 1; Thread.sleep(500)
-      }
-    } finally spark.listenerManager.unregister(listener)
-    assert(!captured.isEmpty, "listener captured no executed plans")
+    }
+    assert(captured.nonEmpty, "listener captured no executed plans")
     def isStoreScan(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
       p match {
         case f: FileSourceScanExec =>
@@ -969,14 +951,13 @@ class PlanSpec extends AnyFunSuite {
         case i: InMemoryTableScanExec => unboundedStoreScan(i.relation.cachedPlan)
         case other => other.children.exists(unboundedStoreScan)
       }
-    import scala.jdk.CollectionConverters._
-    val offending = captured.asScala.toSeq.flatMap(p => deepNodes(p).collect {
+    val offending = captured.flatMap(p => deepNodes(p).collect {
       case e: ShuffleExchangeExec if e.children.exists(unboundedStoreScan) => e })
     assert(offending.isEmpty,
       s"standing-store scan shuffle-exchanged below the gate:\n${offending.headOption.getOrElse("")}")
     // and the tier actually engaged: at least one broadcast join
     // PROBES a streaming store scan
-    val streamed = captured.asScala.exists(p => deepNodes(p).exists {
+    val streamed = captured.exists(p => deepNodes(p).exists {
       case b: BroadcastHashJoinExec => deepNodes(b).exists(isStoreScan)
       case _ => false
     })
@@ -985,7 +966,7 @@ class PlanSpec extends AnyFunSuite {
     // touched/candidate id sets reach the store scan as pushed IN
     // filters (r17 fetcher tier 1 — batch 1's crafted 10-word shared
     // runs guarantee window collisions, so touched is non-empty)
-    val literalFetch = captured.asScala.exists(p => deepNodes(p).exists {
+    val literalFetch = captured.exists(p => deepNodes(p).exists {
       case f: FileSourceScanExec =>
         f.metadata.getOrElse("Location", "").contains("graft_plan_arrival") &&
           f.metadata.getOrElse("PushedFilters", "").contains("In(doc_id")
@@ -993,6 +974,47 @@ class PlanSpec extends AnyFunSuite {
     })
     assert(literalFetch,
       "no store scan carries a pushed In(doc_id, ...) filter — the literal fetch tier never engaged")
+  }
+
+  test("warm serving requests list no files and infer no schema") {
+    // The three serving reads resolve a committed store once per
+    // session (sources.Committed): a repeat request against an unchanged
+    // store must run no "Listing leaf files" job and no schema-inference
+    // job. Run on an AQE-off session, the configuration Sessions.driver
+    // picks for stores this size, where a marketing request is one job.
+    import org.apache.spark.sql.functions.col
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    def twice(what: String)(request: => Unit): (Seq[Listened.Job], Seq[Listened.Job]) = {
+      val cold = Listened.jobs(s)(request)
+      val warm = Listened.jobs(s)(request)
+      assert(!warm.exists(_.listing), s"$what: warm request listed files: $warm")
+      assert(!warm.exists(_.schemaInference), s"$what: warm request inferred a schema: $warm")
+      (cold, warm)
+    }
+    val (coldStore, warmStore) = twice("metrics store") {
+      graft.etl.EtlQueries.channelQueryStoreServe(s, dir).collect()
+    }
+    assert(coldStore.exists(_.schemaInference),
+      s"the first read of the store in a session must infer its schema: $coldStore")
+    assert(warmStore.size == 1, s"warm marketing request ran ${warmStore.size} jobs: $warmStore")
+    twice("ivf index")(graft.operators.Ivf.annIvfServe(s, dir).collect())
+    // 64 cells put more cell= directories under a batch dir than the
+    // parallel-listing threshold (32), so a cold read lists with a job
+    val store = java.nio.file.Files.createTempDirectory("graft_plan_warm").toString
+    val emb = graft.sources.Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+    Seq(0, 1).foreach { i =>
+      graft.operators.Ivf.vectorArrivalBatch(
+        emb.filter(col("vec_id") % 2 === i), store, i.toLong, nlist = 64)
+    }
+    val queries = emb.filter(col("vec_id") < 2)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val (coldAnn, _) = twice("arrival store") {
+      graft.operators.Ivf.arrivalAnnServe(s, store, queries).collect()
+    }
+    assert(coldAnn.exists(_.listing),
+      s"the first arrival-store read in a session must list its cells: $coldAnn")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
   }
 
   test("presentSorted results carry no range-partitioning sampling exchange") {

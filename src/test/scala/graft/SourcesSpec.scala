@@ -45,4 +45,24 @@ class SourcesSpec extends AnyFunSuite {
             org.apache.spark.sql.types.IntegerType)))).getField("k").as("k_json"))
     assert(ev.filter(col("k_regex") =!= col("k_json")).isEmpty)
   }
+
+  test("metrics store read sees an overwrite, and reuses the relation until one") {
+    // MetricsStore.read memoizes the resolved relation per _SUCCESS
+    // stamp: an overwrite commits a new _SUCCESS, so the next read
+    // must return the new rows, not the first write's.
+    import spark.implicits._
+    val out = tmp("memo")
+    def rows(day: String, clicks: Seq[Long]) = clicks.map(c => (day, "web", c))
+      .toDF("day", "channel", "clicks")
+      .select(col("day").cast("date").as("date"), col("channel"), col("clicks"))
+    def back() = graft.sources.MetricsStore.read(spark, out)
+      .select(col("date").cast("string"), col("channel"), col("clicks"))
+      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+    graft.sources.MetricsStore.write(rows("2024-01-01", Seq(1L, 2L)), out)
+    assert(back() == Set(("2024-01-01", "web", 1L), ("2024-01-01", "web", 2L)))
+    assert(graft.sources.MetricsStore.read(spark, out) eq
+      graft.sources.MetricsStore.read(spark, out), "unchanged store re-resolved")
+    graft.sources.MetricsStore.write(rows("2024-01-02", Seq(7L)), out)
+    assert(back() == Set(("2024-01-02", "web", 7L)), "read after an overwrite served the old rows")
+  }
 }

@@ -964,6 +964,51 @@ class StreamingSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ckpt))
   }
 
+  test("arrival ANN serve follows the committed set: a batch committed after a serve is served") {
+    // arrivalAnnServe memoizes its relation per commit stamp; a batch
+    // committed between two serves changes the stamp, so the second
+    // full-probe serve must equal brute force over the GROWN store.
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("graft_arrmemo_store").toString
+    val all = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1)))
+    val n = all.length
+    val nlist = graft.operators.Ivf.autoNlist(n.toLong)
+    val (first, rest) = all.splitAt(n / 2)
+    graft.operators.Ivf.vectorArrivalBatch(first.toSeq.toDF("vec_id", "embedding"),
+      store, 0L, nlist)
+    val queries = Tables.embeddings(spark, dir)
+      .filter(col("vec_id") < 8)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    def serveAll() = graft.operators.Ivf.arrivalAnnServe(spark, store, queries,
+        nprobeOverride = Some(nlist), margin = n).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .sorted.toSeq
+    val exact = graft.operators.Similarity.cosineTopk(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      .sorted.toSeq
+    assert(serveAll() != exact, "half the corpus already serves the full answer")
+    graft.operators.Ivf.vectorArrivalBatch(rest.toSeq.toDF("vec_id", "embedding"),
+      store, 1L, nlist)
+    assert(serveAll() == exact,
+      "a serve after a new commit differs from brute force over the grown store")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
+  }
+
+  test("ivf quantizer training releases its sample outside any Caches scope") {
+    // vectorArrivalBatch trains on its first batch; a library caller
+    // need not wrap it in Caches.withScope to leave nothing persisted.
+    val store = java.nio.file.Files.createTempDirectory("graft_arrtrain_store").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    graft.operators.Ivf.vectorArrivalBatch(
+      Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
+      store, 0L, nlist = 8)
+    val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, s"persisted RDDs remain: ${left.values.map(_.name).mkString("; ")}")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(store))
+  }
+
   test("arrival store compaction: replay-safe collapse, state identical, crash-recoverable") {
     import spark.implicits._
     val store = java.nio.file.Files.createTempDirectory("graft_compact_store").toString
